@@ -27,6 +27,7 @@ from typing import List
 
 from .operators.dedup import _perm_params
 from .operators.similarity import _hyperplane
+from .plans.pages_plan import TS_MAX, TS_MIN
 
 _M = 2147483647  # 2^31 - 1
 _K64 = 11400714819323198485  # 0x9E3779B97F4A7C15
@@ -658,6 +659,21 @@ def retrieval_pairs_sql(sf_dir: str, k_pos: int = 3, k_neg: int = 3,
     """
 
 
+# The row rules of plans.pages_plan.default_pages_plan as DuckDB conditions
+# over the pages fixture, (rule_id, condition) in plan order: a row
+# violates a rule when its condition is false or NULL.
+PAGES_ROW_RULES_SQL = (
+    ("url_scheme", "regexp_matches(url, '^https?://')"),
+    ("url_host_dot", r"regexp_matches(url, '^https?://[^/]+\.')"),
+    ("text_nonempty", "length(text) > 0"),
+    ("lang_shape",
+     "lang IS NOT NULL AND regexp_matches(lang, '^[a-z]{2}$')"),
+    ("warc_ts_range",
+     f"epoch(warc_ts) >= {TS_MIN} AND epoch(warc_ts) < {TS_MAX}"),
+    ("html_title", "starts_with(text, 'Page ')"),
+)
+
+
 def pages_verdicts_sql(n_rows: int = 2000, seed: int = 42,
                        buckets: int = 16, snapshot: str = "bench") -> str:
     """The pages constraint-suite verdicts, re-derived end-to-end in SQL.
@@ -671,7 +687,6 @@ def pages_verdicts_sql(n_rows: int = 2000, seed: int = 42,
     order-dependent in the last bits); pass/fail uses the unrounded value
     on both sides, as the Spark plan does.
     """
-    from .plans.pages_plan import TS_MAX, TS_MIN
     from .sources.pages import ISO_639_1
     from .sources.pages_fixture import ensure_pages_fixture
 
@@ -680,25 +695,15 @@ def pages_verdicts_sql(n_rows: int = 2000, seed: int = 42,
     iso = ", ".join(f"'{c}'" for c in ISO_639_1)
     expect = int(n_rows * 0.9)
 
-    row_rules = [
-        ("url_scheme", "regexp_matches(url, '^https?://')"),
-        ("url_host_dot", r"regexp_matches(url, '^https?://[^/]+\.')"),
-        ("text_nonempty", "length(text) > 0"),
-        ("lang_shape",
-         "lang IS NOT NULL AND regexp_matches(lang, '^[a-z]{2}$')"),
-        ("warc_ts_range",
-         f"epoch(warc_ts) >= {TS_MIN} AND epoch(warc_ts) < {TS_MAX}"),
-        ("html_title", "starts_with(text, 'Page ')"),
-    ]
     np_cols = ",\n        ".join(
         f"SUM(CASE WHEN {cond} THEN 1 ELSE 0 END) AS np{i}"
-        for i, (_, cond) in enumerate(row_rules)
+        for i, (_, cond) in enumerate(PAGES_ROW_RULES_SQL)
     )
     rowv = "\n      UNION ALL ".join(
         f"SELECT CAST(bucket AS INT) AS bucket_id, '{rid}' AS rule_id, "
         f"np{i} = rc AS pass, ROUND(CAST(np{i} AS DOUBLE) / rc, 6) AS metric, "
         f"CAST(rc AS BIGINT) AS rows_checked FROM rowagg"
-        for i, (rid, _) in enumerate(row_rules)
+        for i, (rid, _) in enumerate(PAGES_ROW_RULES_SQL)
     )
 
     def drift_cte(tag, bucket_expr, metric_expr):

@@ -11,6 +11,7 @@ an Iceberg catalog on the classpath, SURVEY.md §7.3.7.)
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import time
@@ -20,7 +21,7 @@ from typing import Dict, List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .checkplan import CheckPlan, run_row_rules, run_table_rules
+from .checkplan import CheckPlan, run_plan_fused
 
 VERDICT_SCHEMA = (
     "bucket_id int, rule_id string, pass boolean, metric double, "
@@ -39,39 +40,24 @@ def run_plan(df: DataFrame, plan: CheckPlan,
              dims: Optional[Dict[str, DataFrame]] = None,
              baselines: Optional[Dict[str, DataFrame]] = None,
              key_col: str = "url", bucket_col: str = "bucket",
-             snapshot: str = "na", fused: bool = True,
-             skew=None) -> RunResult:
+             snapshot: str = "na", skew=None) -> RunResult:
     """Execute every rule class; returns lazily-evaluated sink frames.
 
-    ``fused=True`` (default) runs the four-pass fused plan
-    (checkplan.run_plan_fused — stats and referential ride the bucket
-    rollup, all drift histograms share one GROUPING SETS scan); the
-    un-fused rule-class-per-pass path is kept for cross-checking
-    (``tests/test_pages_pipeline.py`` asserts both produce the same
-    verdicts).  ``skew`` (a checkplan.SkewSalt, fused path only) enables
+    The plan runs as checkplan.run_plan_fused's four passes (stats and
+    referential ride the bucket rollup, all drift histograms share one
+    GROUPING SETS scan); a sink no rule feeds is an empty frame of the
+    sink schema.  ``skew`` (a checkplan.SkewSalt) enables
     heavy-hitter-driven salting of the uniqueness pass.
     """
-    from .checkplan import run_plan_fused
-
     spark = df.sparkSession
-    if fused:
-        rv, rviol = run_plan_fused(df, plan, dims or {}, baselines or {},
-                                   key_col, bucket_col, snapshot, skew=skew)
-        tv = tviol = None
-    else:
-        rv, rviol = run_row_rules(df, plan, key_col, bucket_col, snapshot)
-        tv, tviol = run_table_rules(df, plan, dims or {}, baselines or {},
-                                    key_col, snapshot)
-    empty_v = spark.createDataFrame([], VERDICT_SCHEMA)
-    empty_viol = spark.createDataFrame([], VIOLATION_SCHEMA)
-    verdicts = empty_v
-    for f in (rv, tv):
-        if f is not None:
-            verdicts = verdicts.unionByName(f)
-    violations = empty_viol
-    for f in (rviol, tviol):
-        if f is not None:
-            violations = violations.unionByName(f)
+    v, x = run_plan_fused(df, plan, dims or {}, baselines or {},
+                          key_col, bucket_col, snapshot, skew=skew)
+    verdicts = spark.createDataFrame([], VERDICT_SCHEMA)
+    if v is not None:
+        verdicts = verdicts.unionByName(v)
+    violations = spark.createDataFrame([], VIOLATION_SCHEMA)
+    if x is not None:
+        violations = violations.unionByName(x)
     return RunResult(verdicts=verdicts, violations=violations)
 
 
@@ -84,51 +70,65 @@ def _manifest_path(checkpoint_dir: str) -> str:
     return os.path.join(checkpoint_dir, "manifest.json")
 
 
-def completed_buckets(checkpoint_dir: str, snapshot: str) -> List[int]:
+def _read_manifest(checkpoint_dir: str) -> dict:
     path = _manifest_path(checkpoint_dir)
     if not os.path.exists(path):
-        return []
+        return {}
     with open(path) as f:
-        m = json.load(f)
-    return [int(b) for b, s in m.get("buckets", {}).items()
+        return json.load(f)
+
+
+def _snapshot_buckets(manifest: dict, snapshot: str) -> List[int]:
+    return [int(b) for b, s in manifest.get("buckets", {}).items()
             if s.get("snapshot") == snapshot]
 
 
-def _record_buckets(checkpoint_dir: str, snapshot: str,
-                    buckets: List[int], metrics: Dict[int, dict]) -> None:
+def completed_buckets(checkpoint_dir: str, snapshot: str) -> List[int]:
+    return _snapshot_buckets(_read_manifest(checkpoint_dir), snapshot)
+
+
+def _append(checkpoint_dir: str, verdicts: Optional[DataFrame],
+            violations: Optional[DataFrame]) -> None:
+    if verdicts is not None:
+        (verdicts.write.mode("append").partitionBy("bucket_id")
+         .parquet(os.path.join(checkpoint_dir, "verdicts")))
+    if violations is not None:
+        (violations.write.mode("append")
+         .parquet(os.path.join(checkpoint_dir, "violations")))
+
+
+def _record(spark: SparkSession, checkpoint_dir: str, snapshot: str,
+            table_rules: bool) -> None:
+    """One manifest update: every bucket whose verdicts are written for
+    ``snapshot`` but not yet listed, with its row count, and, if
+    ``table_rules``, the snapshot's table rules.  The new manifest goes to
+    a temp file renamed over the old one, so a crash mid-write leaves the
+    previous manifest intact."""
+    m = _read_manifest(checkpoint_dir)
+    done = _snapshot_buckets(m, snapshot)
+    verdicts_dir = os.path.join(checkpoint_dir, "verdicts")
+    rows = []
+    if os.path.exists(verdicts_dir):
+        rows = (
+            spark.read.parquet(verdicts_dir)
+            .where((F.col("snapshot") == snapshot)
+                   & (F.col("bucket_id") >= 0)
+                   & ~F.col("bucket_id").isin(*done))
+            .groupBy("bucket_id").agg(F.max("rows_checked").alias("rows"))
+            .collect()
+        )
+    now = time.time()
+    for r in rows:
+        m.setdefault("buckets", {})[str(r["bucket_id"])] = {
+            "snapshot": snapshot, "completed_at": now, "rows": r["rows"]}
+    if table_rules:
+        m.setdefault("table_rules", {})[snapshot] = {"completed_at": now}
     os.makedirs(checkpoint_dir, exist_ok=True)
     path = _manifest_path(checkpoint_dir)
-    m = {"buckets": {}}
-    if os.path.exists(path):
-        with open(path) as f:
-            m = json.load(f)
-    for b in buckets:
-        entry = {"snapshot": snapshot, "completed_at": time.time()}
-        entry.update(metrics.get(b, {}))
-        m.setdefault("buckets", {})[str(b)] = entry
-    with open(path, "w") as f:
+    tmp = f"{path}.tmp.{os.getpid()}"
+    with open(tmp, "w") as f:
         json.dump(m, f, indent=1, sort_keys=True)
-
-
-def table_rules_completed(checkpoint_dir: str, snapshot: str) -> bool:
-    path = _manifest_path(checkpoint_dir)
-    if not os.path.exists(path):
-        return False
-    with open(path) as f:
-        m = json.load(f)
-    return snapshot in m.get("table_rules", {})
-
-
-def _record_table_rules(checkpoint_dir: str, snapshot: str) -> None:
-    os.makedirs(checkpoint_dir, exist_ok=True)
-    path = _manifest_path(checkpoint_dir)
-    m = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            m = json.load(f)
-    m.setdefault("table_rules", {})[snapshot] = {"completed_at": time.time()}
-    with open(path, "w") as f:
-        json.dump(m, f, indent=1, sort_keys=True)
+    os.replace(tmp, path)
 
 
 def run_resumable(df: DataFrame, plan: CheckPlan, checkpoint_dir: str,
@@ -136,78 +136,37 @@ def run_resumable(df: DataFrame, plan: CheckPlan, checkpoint_dir: str,
                   baselines: Optional[Dict[str, DataFrame]] = None,
                   key_col: str = "url", bucket_col: str = "bucket",
                   snapshot: str = "na", skew=None) -> None:
-    """Row-rule pass with per-bucket checkpointing + lineage.
+    """Run the plan into a checkpoint directory, resuming an interrupted
+    run of the same snapshot.
 
-    Buckets already completed for this snapshot are skipped (the resume
-    anti-join); each completed bucket's verdicts land partitioned by
-    bucket_id, and the manifest records (bucket, snapshot, rows, ts).
-    Table-scope rules run once after all buckets complete.  ``skew`` (a
-    checkplan.SkewSalt) applies to the fused fresh-run path's uniqueness
-    pass, same as run_plan.
+    Verdicts land partitioned by bucket_id, violations beside them; the
+    manifest records each completed bucket (snapshot, rows, ts) and, last,
+    the snapshot's table-scope rules.  A snapshot whose table rules are
+    recorded is complete, so its relaunch returns at once and writes
+    nothing.  A fresh run is one run_plan_fused call over the whole plan.
+    A resumed run makes one call with the row rules alone over the buckets
+    the manifest does not list, then one with the table rules alone over
+    the whole table — the same engine, so a resumed run's verdicts use
+    the same estimators as a fresh run's.  ``skew`` is as in run_plan.
     """
     spark = df.sparkSession
-    done = set(completed_buckets(checkpoint_dir, snapshot))
-    remaining_df = df.filter(~F.col(bucket_col).isin(*done)) if done else df
-
-    if not done and not table_rules_completed(checkpoint_dir, snapshot):
-        # fresh run (the common launch path): ONE fused four-pass plan
-        # covers row + table rules together — see checkplan.run_plan_fused.
-        # Resumed runs fall through to the split path below, because the
-        # row pass must be restricted to remaining buckets while table
-        # rules always see the whole table.
-        from .checkplan import run_plan_fused
-
-        fv, fviol = run_plan_fused(df, plan, dims or {}, baselines or {},
-                                   key_col, bucket_col, snapshot, skew=skew)
-        if fv is not None:
-            (fv.write.mode("append").partitionBy("bucket_id")
-             .parquet(os.path.join(checkpoint_dir, "verdicts")))
-        if fviol is not None:
-            (fviol.write.mode("append")
-             .parquet(os.path.join(checkpoint_dir, "violations")))
-        stats = (
-            spark.read.parquet(os.path.join(checkpoint_dir, "verdicts"))
-            .where(F.col("snapshot") == snapshot)
-            .groupBy("bucket_id").agg(F.max("rows_checked").alias("rows"))
-            .collect()
-        )
-        finished = [r["bucket_id"] for r in stats if r["bucket_id"] >= 0]
-        metrics = {r["bucket_id"]: {"rows": r["rows"]} for r in stats}
-        _record_buckets(checkpoint_dir, snapshot, finished, metrics)
-        _record_table_rules(checkpoint_dir, snapshot)
+    manifest = _read_manifest(checkpoint_dir)
+    if snapshot in manifest.get("table_rules", {}):
         return
+    done = _snapshot_buckets(manifest, snapshot)
 
-    rv, rviol = run_row_rules(remaining_df, plan, key_col, bucket_col, snapshot)
-    if rv is not None:
-        (rv.write.mode("append").partitionBy("bucket_id")
-         .parquet(os.path.join(checkpoint_dir, "verdicts")))
-        (rviol.write.mode("append")
-         .parquet(os.path.join(checkpoint_dir, "violations")))
-        stats = (
-            spark.read.parquet(os.path.join(checkpoint_dir, "verdicts"))
-            .where(F.col("snapshot") == snapshot)
-            .groupBy("bucket_id").agg(F.max("rows_checked").alias("rows"))
-            .collect()
-        )
-        finished = [r["bucket_id"] for r in stats if r["bucket_id"] >= 0]
-        metrics = {r["bucket_id"]: {"rows": r["rows"]} for r in stats}
-        _record_buckets(checkpoint_dir, snapshot, finished, metrics)
+    def run(d: DataFrame, p: CheckPlan) -> tuple:
+        return run_plan_fused(d, p, dims or {}, baselines or {}, key_col,
+                              bucket_col, snapshot, skew=skew)
 
-    # Table-scope rules run once per snapshot: a resumed run must not append
-    # a second (possibly conflicting) bucket_id=-1 verdict set, so their
-    # completion is recorded in the manifest like buckets are.
-    if table_rules_completed(checkpoint_dir, snapshot):
-        return
-    tv, tviol = run_table_rules(df, plan, dims or {}, baselines or {},
-                                key_col, snapshot)
-    if tv is not None:
-        (tv.write.mode("append").partitionBy("bucket_id")
-         .parquet(os.path.join(checkpoint_dir, "verdicts")))
-    if tviol is not None:
-        (tviol.write.mode("append")
-         .parquet(os.path.join(checkpoint_dir, "violations")))
-    if tv is not None or tviol is not None:
-        _record_table_rules(checkpoint_dir, snapshot)
+    if done:
+        remaining = df.filter(~F.col(bucket_col).isin(*done))
+        _append(checkpoint_dir,
+                *run(remaining, CheckPlan(row_rules=plan.row_rules)))
+        _record(spark, checkpoint_dir, snapshot, table_rules=False)
+        plan = dataclasses.replace(plan, row_rules=[])
+    _append(checkpoint_dir, *run(df, plan))
+    _record(spark, checkpoint_dir, snapshot, table_rules=True)
 
 
 def read_verdicts(spark: SparkSession, checkpoint_dir: str) -> DataFrame:

@@ -1,10 +1,24 @@
 """End-to-end constraint pipeline over the synthetic pages corpus."""
 
+import json
+import os
+import shutil
+import types
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
+from katydid_haskell_spark.plans import runner
+from katydid_haskell_spark.plans.checkplan import CheckPlan, RowRule
 from katydid_haskell_spark.plans.pages_plan import default_pages_plan, pages_baselines
-from katydid_haskell_spark.plans.runner import run_plan, run_resumable, read_verdicts
+from katydid_haskell_spark.plans.runner import (
+    completed_buckets,
+    read_verdicts,
+    read_violations,
+    run_plan,
+    run_resumable,
+)
 from katydid_haskell_spark.sources.pages import (
     extract_text,
     lang_dim_df,
@@ -103,6 +117,16 @@ def test_drift_self_is_zero(spark, pages):
     assert abs(row["kl"]) < 1e-9
 
 
+def _files(root):
+    return sorted(os.path.relpath(os.path.join(d, f), root)
+                  for d, _, fs in os.walk(root) for f in fs)
+
+
+def _manifest_bytes(ckpt):
+    with open(os.path.join(ckpt, "manifest.json"), "rb") as f:
+        return f.read()
+
+
 def test_resumable(spark, pages, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     plan = default_pages_plan()
@@ -112,8 +136,12 @@ def test_resumable(spark, pages, tmp_path):
     v1 = read_verdicts(spark, ckpt)
     n_first = v1.count()
     assert v1.where("bucket_id >= 0").count() > 0
-    # resume: all buckets done → row pass adds nothing for snapshot s1
+    files, manifest = _files(ckpt), _manifest_bytes(ckpt)
+    # relaunch of the completed snapshot: a no-op — no file written, the
+    # manifest byte-identical
     run_resumable(pages, plan, ckpt, dims, baselines, snapshot="s1")
+    assert _files(ckpt) == files
+    assert _manifest_bytes(ckpt) == manifest
     v2 = read_verdicts(spark, ckpt)
     row_v1 = v1.where("bucket_id >= 0").count()
     row_v2 = v2.where("bucket_id >= 0").count()
@@ -126,35 +154,155 @@ def test_resumable(spark, pages, tmp_path):
     assert t2 == 0
 
 
-def test_fused_plan_matches_unfused(spark, pages):
-    """run_plan(fused=True) — 4 full-table passes — must produce the same
-    verdicts and violations as the rule-class-per-pass path (the only
-    allowed delta: approx_distinct estimates, HLL++ vs merged
-    DataSketches)."""
+def _checkpoint_sinks(spark, path):
+    """(bucket_id, rule_id, pass, round(metric, 9), rows_checked,
+    snapshot) verdict rows and the violation multiset under a
+    checkpoint."""
+    verdicts = sorted(
+        (r.bucket_id, r.rule_id, r["pass"],
+         None if r.metric is None else round(r.metric, 9),
+         r.rows_checked, r.snapshot)
+        for r in read_verdicts(spark, path).collect())
+    violations = Counter(tuple(r) for r in read_violations(spark, path)
+                         .select("url", "rule_id", "detail").collect())
+    return verdicts, violations
+
+
+def test_resume_from_crashed_checkpoint(spark, pages, tmp_path):
+    """A run that crashed with half of its buckets done and no table
+    rules resumes to exactly the clean run's sinks: same verdict rows
+    (url_distinct's sketch estimate included), no duplicate verdict, and
+    nothing rewritten for the buckets already done."""
     plan = default_pages_plan(expect_rows=N)
     dims = {"lang_dim": lang_dim_df(spark)}
     baselines = pages_baselines(spark, pages_df(spark, N, drifted=False))
-    a = run_plan(pages, plan, dims, baselines, snapshot="s", fused=True)
-    b = run_plan(pages, plan, dims, baselines, snapshot="s", fused=False)
+    clean = str(tmp_path / "clean")
+    run_resumable(pages, plan, clean, dims, baselines, snapshot="s1")
+    buckets = sorted(completed_buckets(clean, "s1"))
+    kept = buckets[: len(buckets) // 2]
+    assert kept
 
-    def vkey(rows):
-        out = {}
-        for r in rows:
-            out[(r.bucket_id, r.rule_id)] = (
-                r["pass"], round(r.metric, 9) if r.metric is not None else None,
-                r.rows_checked)
+    # the crashed checkpoint: the kept buckets' verdict partitions and
+    # row-rule violations, no bucket_id=-1, a manifest listing only them
+    crashed = str(tmp_path / "crashed")
+    for b in kept:
+        part = f"verdicts/bucket_id={b}"
+        shutil.copytree(os.path.join(clean, part),
+                        os.path.join(crashed, part))
+    (read_violations(spark, clean)
+     .where(F.col("rule_id").isin([r.rule_id for r in plan.row_rules]))
+     .join(pages.select("url", "bucket").distinct(), "url")
+     .where(F.col("bucket").isin(kept)).drop("bucket")
+     .write.parquet(os.path.join(crashed, "violations")))
+    with open(os.path.join(clean, "manifest.json")) as f:
+        m = json.load(f)
+    with open(os.path.join(crashed, "manifest.json"), "w") as f:
+        json.dump({"buckets": {str(b): m["buckets"][str(b)] for b in kept}},
+                  f)
+    done_files = {b: _files(os.path.join(crashed, f"verdicts/bucket_id={b}"))
+                  for b in kept}
+
+    run_resumable(pages, plan, crashed, dims, baselines, snapshot="s1")
+
+    clean_v, clean_x = _checkpoint_sinks(spark, clean)
+    got_v, got_x = _checkpoint_sinks(spark, crashed)
+    assert got_v == clean_v
+    assert got_x == clean_x
+
+    def url_distinct(path):
+        return (read_verdicts(spark, path)
+                .where(F.col("rule_id") == "url_distinct").first().metric)
+
+    assert url_distinct(crashed) == url_distinct(clean)
+    assert (read_verdicts(spark, crashed)
+            .groupBy("bucket_id", "rule_id").count()
+            .where("count > 1").count()) == 0
+    for b in kept:
+        assert _files(os.path.join(crashed, f"verdicts/bucket_id={b}")) \
+            == done_files[b], b
+    assert sorted(completed_buckets(crashed, "s1")) == buckets
+
+
+def test_manifest_write_is_atomic(spark, tmp_path, monkeypatch):
+    """A manifest write that dies mid-dump leaves the previous manifest
+    intact: completed_buckets still returns the buckets recorded
+    before."""
+    df = spark.createDataFrame(
+        [("https://a.example/", 0), ("http://b.example/", 1)],
+        "url string, bucket int")
+    plan = CheckPlan(row_rules=[RowRule("https", '.url ^= "https://"')])
+    ckpt = str(tmp_path / "ckpt")
+    run_resumable(df, plan, ckpt, snapshot="s1")
+    assert sorted(completed_buckets(ckpt, "s1")) == [0, 1]
+
+    def torn_dump(obj, f, **kw):
+        f.write(json.dumps(obj, **kw)[:10])
+        raise OSError("disk full")
+
+    monkeypatch.setattr(runner, "json",
+                        types.SimpleNamespace(load=json.load, dump=torn_dump))
+    with pytest.raises(OSError, match="disk full"):
+        run_resumable(df, plan, ckpt, snapshot="s2")
+    monkeypatch.undo()
+    assert sorted(completed_buckets(ckpt, "s1")) == [0, 1]
+    assert completed_buckets(ckpt, "s2") == []
+
+
+def test_violations_match_duckdb(spark, tmp_path):
+    """The suite's violations over the Spark-free pages fixture parquet
+    are the (url, rule_id, detail) multiset DuckDB derives from the same
+    file: a row per failed row rule (oracles.PAGES_ROW_RULES_SQL), per
+    lang outside ISO 639-1, and per duplicated url."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from katydid_haskell_spark.oracles import PAGES_ROW_RULES_SQL
+    from katydid_haskell_spark.sources.pages import ISO_639_1
+    from katydid_haskell_spark.sources.pages_fixture import (
+        ensure_pages_fixture)
+
+    def fixture(drifted):
+        # Spark reads no nanosecond timestamps: store warc_ts as UTC
+        # microseconds, which Spark reads as TIMESTAMP (as pages_df's)
+        t = pq.read_table(ensure_pages_fixture(2000, drifted=drifted))
+        i = t.schema.get_field_index("warc_ts")
+        t = t.set_column(i, "warc_ts", t.column(i).cast(
+            pa.timestamp("us", tz="UTC")))
+        out = str(tmp_path / f"pages_{drifted}.parquet")
+        pq.write_table(t, out)
         return out
 
-    va, vb = vkey(a.verdicts.collect()), vkey(b.verdicts.collect())
-    assert set(va) == set(vb)
-    for k in va:
-        if k[1] == "url_distinct":  # approx estimator may differ slightly
-            assert abs(va[k][1] - vb[k][1]) / max(vb[k][1], 1) < 0.05
-            continue
-        assert va[k] == vb[k], f"{k}: fused={va[k]} unfused={vb[k]}"
-    sa = sorted((r.url, r.rule_id, r.detail) for r in a.violations.collect())
-    sb = sorted((r.url, r.rule_id, r.detail) for r in b.violations.collect())
-    assert sa == sb
+    path, base = fixture(True), fixture(False)
+    plan = default_pages_plan(expect_rows=2000)
+    res = run_plan(spark.read.parquet(path), plan,
+                   {"lang_dim": lang_dim_df(spark)},
+                   pages_baselines(spark, spark.read.parquet(base)),
+                   snapshot="s")
+    got = Counter((r.url, r.rule_id, r.detail)
+                  for r in res.violations.collect())
+
+    detail = {r.rule_id: r.detail or r.spec for r in plan.row_rules}
+    assert [rid for rid, _ in PAGES_ROW_RULES_SQL] == list(detail)
+    iso = ", ".join(f"'{c}'" for c in ISO_639_1)
+    parts = [
+        f"SELECT url, '{rid}', '{detail[rid]}' FROM pages "
+        f"WHERE NOT COALESCE({cond}, FALSE)"
+        for rid, cond in PAGES_ROW_RULES_SQL
+    ] + [
+        "SELECT url, 'lang_in_iso639', "
+        "'lang=' || COALESCE(lang, 'NULL') || ' not in dimension' "
+        f"FROM pages WHERE lang IS NULL OR lang NOT IN ({iso})",
+        "SELECT url, 'unique_url', 'duplicate count=' || COUNT(*) "
+        "FROM pages GROUP BY url HAVING COUNT(*) > 1",
+    ]
+    con = duckdb.connect()
+    want = Counter(tuple(r) for r in con.execute(
+        f"WITH pages AS (SELECT * FROM read_parquet('{path}')) "
+        + " UNION ALL ".join(parts)).fetchall())
+    con.close()
+    assert sum(got.values()) > 0
+    assert got == want
 
 
 def test_fused_plan_prunes_unused_columns(spark, tmp_path):
@@ -207,65 +355,39 @@ def test_fused_skew_salt_matches_plain(spark, pages):
     assert ("https://hot.example.com/dup", "duplicate count=600") in viola
 
 
-def test_percentile_stat_rules_fused_parity(spark):
-    """Percentile StatRules (p50 / p99 / approx_p95): valid in both
-    engines, identical verdicts fused vs unfused, and the fused plan
-    folds ALL non-mergeable metrics (exact distinct + percentiles) into
-    ONE extra global pass."""
+def test_percentile_stat_rules_closed_forms(spark):
+    """Percentile and exact-distinct StatRules (p50 / p99 / approx_p95 /
+    distinct) against closed forms: exact metrics equal a standalone
+    percentile() / COUNT(DISTINCT), and the approx_p95 KLL estimate lies
+    within rank error of the true 0.95."""
     from katydid_haskell_spark.operators.stats import StatRule
-    from katydid_haskell_spark.plans.checkplan import CheckPlan
-    from katydid_haskell_spark.plans.runner import run_plan
 
     df = with_bucket(pages_df(spark, 800)).withColumn(
         "text_len", F.length("text"))
-    plan = CheckPlan(
-        row_rules=[],
-        stat_rules=[
-            StatRule("len_p50_floor", "text_len", "p50", "ge", 1.0),
-            StatRule("len_p99_cap", "text_len", "p99", "le", 1e7),
-            StatRule("len_p95_approx", "text_len", "approx_p95", "le", 1e7),
-            StatRule("url_exact_distinct", "url", "distinct", "ge", 1),
-        ],
-        unique_rules=[], ref_rules=[], drift_rules=[],
-    )
-    a = run_plan(df, plan, {}, {}, snapshot="s", fused=True)
-    b = run_plan(df, plan, {}, {}, snapshot="s", fused=False)
-    va = {(r.bucket_id, r.rule_id): (r["pass"], r.metric)
-          for r in a.verdicts.collect()}
-    vb = {(r.bucket_id, r.rule_id): (r["pass"], r.metric)
-          for r in b.verdicts.collect()}
-    assert set(va) == set(vb)
+    plan = CheckPlan(stat_rules=[
+        StatRule("len_p50_floor", "text_len", "p50", "ge", 1.0),
+        StatRule("len_p99_cap", "text_len", "p99", "le", 1e7),
+        StatRule("len_p95_approx", "text_len", "approx_p95", "le", 1e7),
+        StatRule("url_exact_distinct", "url", "distinct", "ge", 1),
+    ])
+    v = {r.rule_id: (r.bucket_id, r["pass"], r.metric)
+         for r in run_plan(df, plan, snapshot="s").verdicts.collect()}
+    assert set(v) == {"len_p50_floor", "len_p99_cap", "len_p95_approx",
+                      "url_exact_distinct"}
+    assert all(b == -1 and p for b, p, _ in v.values())
+    p50, p99, distinct = df.agg(
+        F.expr("percentile(text_len, 0.5)"),
+        F.expr("percentile(text_len, 0.99)"),
+        F.expr("count(DISTINCT url)"),
+    ).first()
+    assert v["len_p50_floor"][2] == p50
+    assert v["len_p99_cap"][2] == p99
+    assert v["url_exact_distinct"][2] == distinct
     # KLL's guarantee is RANK-space (~1.65% normalized rank error at the
-    # default k), NOT value-space: where the value distribution jumps,
-    # a within-spec rank wobble moves the VALUE arbitrarily far, so a
-    # relative-value tolerance here flakes by design (observed in-suite;
-    # KLL compaction is also randomized run-to-run).  Gate each engine's
-    # estimate by its empirical rank instead.
-    lens = sorted(r[0] for r in df.select("text_len").collect())
-
-    def _rank(v):
-        import bisect
-        return bisect.bisect_right(lens, v) / len(lens)
-
-    for k in va:
-        if k[1] == "len_p95_approx":
-            # approx_p* is the second allowed estimator delta (after
-            # approx_distinct): fused merges per-bucket KLL partials,
-            # unfused builds one sketch — both must land within rank
-            # error of the true 0.95, but not necessarily on the same
-            # value
-            for est in (va[k][1], vb[k][1]):
-                assert abs(_rank(est) - 0.95) < 0.05, (
-                    f"rank({est}) = {_rank(est)}")
-            continue
-        assert va[k] == vb[k], f"{k}: fused={va[k]} unfused={vb[k]}"
-    assert all(p for p, _ in va.values())
-    # exact p50 really is the median of the column
-    med = df.agg(F.expr("percentile(text_len, 0.5)")).collect()[0][0]
-    assert va[(-1, "len_p50_floor")][1] == med
-    # KLL estimate lands within rank error of the exact p95: the
-    # empirical rank of the returned value stays inside [0.90, 1.0]
-    kll_v = va[(-1, "len_p95_approx")][1]
-    n_tot = df.count()
-    rank = df.where(F.col("text_len") <= kll_v).count() / n_tot
+    # default k), NOT value-space: where the value distribution jumps, a
+    # within-spec rank wobble moves the VALUE arbitrarily far (and KLL
+    # compaction is randomized run-to-run), so gate the estimate by its
+    # empirical rank
+    kll_v = v["len_p95_approx"][2]
+    rank = df.where(F.col("text_len") <= kll_v).count() / df.count()
     assert 0.90 <= rank <= 1.0, (kll_v, rank)
