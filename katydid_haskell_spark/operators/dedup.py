@@ -670,6 +670,8 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
       O(component diameter) rounds: ideal for near-dup graphs, whose
       components are quasi-cliques (diameter 2-3), pathological for
       long chains (a 10^6-node chain = 10^6 sequential Spark jobs).
+      The edge list is not deduplicated first, so duplicate edges are
+      paid in every round's join.
     - ``"star"`` — alternating large-star/small-star contraction
       (Kiveris et al., "Connected Components in MapReduce and Beyond",
       SoCC'14): per round two join+agg passes over the edge set; edge
@@ -748,14 +750,17 @@ def _cc_min_label(edges: DataFrame, max_iter: int) -> DataFrame:
             # convergence check below is a plain scan of the checkpoint —
             # not a per-round join of the new labels back to the old ones
             # (r9: saved one join job per round)
-            nlabel = F.least(F.col("label"),
-                             F.coalesce(F.col("nmin"), F.col("label")))
+            # the old label under its own name, so `chg` can never bind to
+            # the new `label` this select defines
+            old = labels.select("id", F.col("label").alias("old_label"))
+            nlabel = F.least(F.col("old_label"),
+                             F.coalesce(F.col("nmin"), F.col("old_label")))
             new_labels = (
-                labels.join(neighbor_min, labels.id == neighbor_min.a, "left")
+                old.join(neighbor_min, old.id == neighbor_min.a, "left")
                 .select(
                     "id",
                     nlabel.alias("label"),
-                    (nlabel != F.col("label")).alias("chg"),
+                    (nlabel != F.col("old_label")).alias("chg"),
                 )
                 .localCheckpoint(eager=True)
             )

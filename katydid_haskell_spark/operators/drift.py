@@ -2,9 +2,13 @@
 (SURVEY.md §2.6).
 
 The heavy pass is one ``groupBy(bucket).count()`` per metric (partial+final
-hash agg).  The resulting histogram is tiny (hundreds of buckets), so the
-baseline comparison is a broadcast full-outer join + Column arithmetic —
-no second scan, no driver-side math.
+hash agg).  The resulting histograms are tiny (hundreds of buckets), so the
+comparison with the baseline is a reduction over their union, in one
+partition: one aggregate matches buckets, a second gathers each rule's
+bucket list with its totals, and higher-order functions sum the PSI/KL
+terms over that list.  No join, no cross join, no exchange, no second
+scan, no driver-side math; every drift rule of a plan shares the same two
+aggregates.
 
 PSI = Σ (p_i − q_i) · ln(p_i / q_i)   (current p vs baseline q)
 KL  = Σ p_i · ln(p_i / q_i)
@@ -34,48 +38,77 @@ def histogram(df: DataFrame, bucket: Column) -> DataFrame:
     )
 
 
+def divergences_by_rule(current: DataFrame, baseline: DataFrame,
+                        n_rules: int, eps: float = 1e-6) -> DataFrame:
+    """One row per rule in ``range(n_rules)``: rule, psi, kl, n_current,
+    n_baseline.
+
+    Both inputs are (rule, bucket, cnt) histograms tagged with an int rule
+    index; a bucket occurs at most once per rule and side, as
+    :func:`histogram` produces it.  Buckets match as in
+    ``FULL OUTER JOIN USING (bucket)``: a NULL bucket never matches the
+    other side.  A rule with no bucket on either side still gets its row,
+    with NULL psi/kl/n_current/n_baseline.
+    """
+    def side(h: DataFrame, s: int) -> DataFrame:
+        return h.select("rule", "bucket", F.lit(s).alias("side"), "cnt")
+
+    def cnt_on(s: int) -> Column:
+        return F.coalesce(F.sum(F.when(F.col("side") == s, F.col("cnt"))),
+                          F.lit(0))
+
+    # the histograms are tiny: each aggregate below reads ONE partition,
+    # so neither needs an exchange
+    tagged = side(current, 0).unionByName(side(baseline, 1)).coalesce(1)
+    per_bucket = tagged.groupBy(
+        "rule", "bucket",
+        # a NULL bucket keys on its side, so it never meets the other's
+        F.when(F.col("bucket").isNull(), F.col("side")).alias("null_side"),
+    ).agg(
+        cnt_on(0).alias("cnt_p"), cnt_on(1).alias("cnt_q"),
+    ).select("rule", "cnt_p", "cnt_q")
+    # one bucket-less row per rule, so every rule reaches the groupBy below
+    seeds = current.sparkSession.range(n_rules).select(
+        F.col("id").cast("int").alias("rule"),
+        F.lit(None).cast("long").alias("cnt_p"),
+        F.lit(None).cast("long").alias("cnt_q"),
+    )
+    totals = per_bucket.unionByName(seeds).coalesce(1).groupBy("rule").agg(
+        F.sum("cnt_p").alias("np"),
+        F.sum("cnt_q").alias("nq"),
+        F.count("cnt_p").alias("k"),
+        # sorted, so the float sums below do not depend on row order
+        F.array_sort(F.collect_list(F.when(
+            F.col("cnt_p").isNotNull(), F.struct("cnt_p", "cnt_q"),
+        ))).alias("buckets"),
+    )
+
+    def total(term) -> Column:
+        def add(acc: Column, b: Column) -> Column:
+            p = (b["cnt_p"] + F.lit(eps)) / (F.col("np") + F.col("k") * eps)
+            q = (b["cnt_q"] + F.lit(eps)) / (F.col("nq") + F.col("k") * eps)
+            return acc + term(p, q)
+        return F.when(F.col("k") > 0,
+                      F.aggregate("buckets", F.lit(0.0), add))
+
+    return totals.select(
+        "rule",
+        total(lambda p, q: (p - q) * F.log(p / q)).alias("psi"),
+        total(lambda p, q: p * F.log(p / q)).alias("kl"),
+        F.col("np").alias("n_current"),
+        F.col("nq").alias("n_baseline"),
+    )
+
+
 def divergences(current: DataFrame, baseline: DataFrame,
                 eps: float = 1e-6) -> DataFrame:
     """One row: psi, kl, n_current, n_baseline.
 
-    Both inputs are (bucket, cnt) histograms; baseline is broadcast.
+    Both inputs are (bucket, cnt) histograms; the one-rule case of
+    :func:`divergences_by_rule`.
     """
-    cur = current.select("bucket", F.col("cnt").alias("cnt_p"))
-    base = baseline.select("bucket", F.col("cnt").alias("cnt_q"))
-    joined = cur.join(F.broadcast(base), "bucket", "full_outer").select(
-        F.coalesce("cnt_p", F.lit(0)).alias("cnt_p"),
-        F.coalesce("cnt_q", F.lit(0)).alias("cnt_q"),
-    )
-    tot = joined.agg(
-        F.sum("cnt_p").alias("np"), F.sum("cnt_q").alias("nq"),
-        F.count(F.lit(1)).alias("k"),
-    )
-    withp = joined.crossJoin(F.broadcast(tot)).select(
-        ((F.col("cnt_p") + F.lit(eps)) / (F.col("np") + F.col("k") * eps)).alias("p"),
-        ((F.col("cnt_q") + F.lit(eps)) / (F.col("nq") + F.col("k") * eps)).alias("q"),
-        "np", "nq",
-    )
-    return withp.agg(
-        F.sum((F.col("p") - F.col("q")) * F.log(F.col("p") / F.col("q"))).alias("psi"),
-        F.sum(F.col("p") * F.log(F.col("p") / F.col("q"))).alias("kl"),
-        F.first("np").alias("n_current"),
-        F.first("nq").alias("n_baseline"),
-    )
+    def one(h: DataFrame) -> DataFrame:
+        return h.select(F.lit(0).alias("rule"), "bucket", "cnt")
 
-
-def drift_verdict(current_hist: DataFrame, baseline_hist: DataFrame,
-                  rule_id: str, max_psi: float = 0.2,
-                  metric: str = "psi") -> DataFrame:
-    d = divergences(current_hist, baseline_hist)
-    m = F.col(metric)
-    return d.select(
-        F.lit(rule_id).alias("rule_id"),
-        F.lit("table").alias("scope"),
-        (m <= F.lit(max_psi)).alias("pass"),
-        m.cast("double").alias("metric"),
-        F.concat(
-            F.lit(f"{metric}="), F.round(m, 6).cast("string"),
-            F.lit(f" threshold={max_psi} n_cur="), F.col("n_current"),
-            F.lit(" n_base="), F.col("n_baseline"),
-        ).alias("detail"),
-    )
+    return divergences_by_rule(one(current), one(baseline), 1,
+                               eps).drop("rule")

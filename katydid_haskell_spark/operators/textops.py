@@ -71,8 +71,10 @@ def n_words(col: Column) -> Column:
     """Canonical word COUNT: == ``F.size(words(col))`` by construction
     (the number of non-empty segments left by splitting on
     ``[^a-zA-Z0-9']+`` is exactly the number of maximal runs of
-    ``[a-zA-Z0-9']`` characters; ``lower()`` maps the class onto
-    itself, so the count is case-fold-invariant on the corpus).
+    ``[a-zA-Z0-9']`` characters).  The text is lowered first, as in
+    ``words()``: ``lower()`` does NOT map the class onto itself — U+212A
+    KELVIN SIGN lowers to ``k`` and U+0130 to ``i`` + U+0307 — so
+    counting the unlowered text would differ on such characters.
 
     Exists because the split form is a measured r9 pathology: the
     NEGATED char class costs ~36 µs/doc in java.util.regex on this JVM
@@ -84,7 +86,7 @@ def n_words(col: Column) -> Column:
     this wherever only the COUNT is needed; fall back to ``words()``
     when the word list itself is consumed."""
     return F.coalesce(
-        F.regexp_count(col, F.lit("[a-zA-Z0-9']+")),
+        F.regexp_count(F.lower(col), F.lit("[a-zA-Z0-9']+")),
         F.lit(0))
 
 

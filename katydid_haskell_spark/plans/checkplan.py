@@ -8,8 +8,8 @@ constraint classes compile on the driver into a plan of
     per-bucket rollup (one partial+final aggregation) and a violations
     explode from the same pass;
   - **table rules** — stats and referential integrity (riding the same
-    rollup), uniqueness (key shuffle), drift (histograms + tiny broadcast
-    join).
+    rollup), uniqueness (key shuffle), drift (histograms + one join-free
+    reduction shared by every drift rule).
 
 ``run_plan_fused`` is the one engine that evaluates a plan; callers that
 need a subset of the rule classes (a resumed run, a per-pass timing) run it
@@ -91,7 +91,9 @@ class RefRule:
 @dataclass(frozen=True)
 class DriftRule:
     rule_id: str
-    bucketizer: Callable[[], Column]  # () -> bucket Column over the table
+    # () -> bucket Column over the table; the drift rules of one plan
+    # share one reduction, so their buckets must have one common type
+    bucketizer: Callable[[], Column]
     baseline_name: str  # key into the baselines dict passed at run time
     max_value: float = 0.2
     metric: str = "psi"
@@ -145,6 +147,14 @@ def _salted_duplicate_keys(df: DataFrame, key: str,
             .filter(F.col("dup_count") > 1))
 
 
+def _case(branches) -> Column:
+    """CASE WHEN c0 THEN v0 WHEN c1 THEN v1 … END over (c, v) pairs."""
+    out = None
+    for cond, value in branches:
+        out = F.when(cond, value) if out is None else out.when(cond, value)
+    return out
+
+
 def run_plan_fused(df: DataFrame, plan: CheckPlan,
                    dims: Dict[str, DataFrame],
                    baselines: Dict[str, DataFrame],
@@ -160,7 +170,8 @@ def run_plan_fused(df: DataFrame, plan: CheckPlan,
          tiny per-bucket frame;
       2. violations — row-level failures (row rules + referential) from
          the same projection;
-      3. drift — every drift histogram from one scan via GROUPING SETS;
+      3. drift — every drift histogram from one scan via GROUPING SETS,
+         compared with its baseline by one reduction shared by all rules;
       4. uniqueness — the key shuffle (inherently its own pass).
 
     At 10^12 rows passes are the budget; this is the shape you'd run.
@@ -394,22 +405,39 @@ def run_plan_fused(df: DataFrame, plan: CheckPlan,
             .persist()
         )
         n_drift = len(plan.drift_rules)
+        # grouping_id bit = 0 for the retained column; the histograms of
+        # every rule, tagged with its index, feed ONE shared reduction
+        gid_is = [F.col("__gid") == ((2 ** n_drift - 1)
+                                     ^ (2 ** (n_drift - 1 - i)))
+                  for i in range(n_drift)]
+        cur = hists.select(
+            _case((g, F.lit(i)) for i, g in enumerate(gid_is)).alias("rule"),
+            _case((g, F.col(f"__g_{i}")) for i, g in enumerate(gid_is))
+            .alias("bucket"),
+            "cnt",
+        )
+        base = None
         for i, r in enumerate(plan.drift_rules):
-            # grouping_id bit = 0 for the retained column
-            gid = (2 ** n_drift - 1) ^ (2 ** (n_drift - 1 - i))
-            cur = (hists.filter(F.col("__gid") == gid)
-                   .select(F.col(f"__g_{i}").alias("bucket"), "cnt"))
-            verdict_frames.append(
-                drift_ops.drift_verdict(cur, baselines[r.baseline_name],
-                                        r.rule_id, r.max_value, r.metric)
-                .select(
-                    F.lit(TABLE_SCOPE_BUCKET).alias("bucket_id"),
-                    "rule_id", "pass",
-                    F.col("metric"),
-                    F.lit(None).cast("long").alias("rows_checked"),
-                    F.lit(snapshot).alias("snapshot"),
-                )
+            b = baselines[r.baseline_name].select(
+                F.lit(i).alias("rule"), "bucket", "cnt")
+            base = b if base is None else base.unionByName(b)
+
+        def by_rule(value) -> Column:
+            return _case((F.col("rule") == i, value(r))
+                         for i, r in enumerate(plan.drift_rules))
+
+        verdict_frames.append(
+            drift_ops.divergences_by_rule(cur, base, n_drift).select(
+                F.lit(TABLE_SCOPE_BUCKET).alias("bucket_id"),
+                by_rule(lambda r: F.lit(r.rule_id)).alias("rule_id"),
+                by_rule(lambda r: F.col(r.metric) <= F.lit(r.max_value))
+                .alias("pass"),
+                by_rule(lambda r: F.col(r.metric)).cast("double")
+                .alias("metric"),
+                F.lit(None).cast("long").alias("rows_checked"),
+                F.lit(snapshot).alias("snapshot"),
             )
+        )
 
     # ---- pass 4: uniqueness (inherent key shuffle) ----
     violation_frames: List[DataFrame] = []

@@ -9,8 +9,9 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
+from katydid_haskell_spark.operators import drift as drift_ops
 from katydid_haskell_spark.plans import runner
-from katydid_haskell_spark.plans.checkplan import CheckPlan, RowRule
+from katydid_haskell_spark.plans.checkplan import CheckPlan, DriftRule, RowRule
 from katydid_haskell_spark.plans.pages_plan import default_pages_plan, pages_baselines
 from katydid_haskell_spark.plans.runner import (
     completed_buckets,
@@ -115,6 +116,147 @@ def test_drift_self_is_zero(spark, pages):
     row = d.divergences(hist, hist).collect()[0]
     assert abs(row["psi"]) < 1e-9
     assert abs(row["kl"]) < 1e-9
+
+
+def _hist(spark, rows):
+    return spark.createDataFrame(rows, "bucket long, cnt long")
+
+
+def _psi_kl(cur, base, eps=1e-6):
+    """Closed form of drift.divergences over two (bucket, cnt) lists:
+    buckets match as in FULL OUTER JOIN USING (bucket), so a NULL bucket
+    never matches the other side."""
+    import math
+
+    cells = {}
+    for side, hist in ((0, cur), (1, base)):
+        for b, c in hist:
+            cells.setdefault(("null", side) if b is None else b,
+                             [0, 0])[side] = c
+    if not cells:
+        return None, None, None, None
+    n_p = sum(cp for cp, _ in cells.values())
+    n_q = sum(cq for _, cq in cells.values())
+    k = len(cells)
+    psi = kl = 0.0
+    for cp, cq in cells.values():
+        p = (cp + eps) / (n_p + k * eps)
+        q = (cq + eps) / (n_q + k * eps)
+        psi += (p - q) * math.log(p / q)
+        kl += p * math.log(p / q)
+    return psi, kl, n_p, n_q
+
+
+@pytest.mark.parametrize("cur,base,pinned", [
+    # NULL bucket on both sides: the two NULLs stay unmatched (k = 3);
+    # pinned to the values of the full-outer-join implementation
+    ([(None, 4), (1, 6)], [(None, 2), (1, 8)], (9.039987, 5.908111)),
+    # buckets present on one side only
+    ([(1, 5), (2, 3)], [(2, 4), (3, 7)], None),
+    ([], [(1, 3), (2, 1)], None),
+])
+def test_drift_divergences_closed_form(spark, cur, base, pinned):
+    rows = drift_ops.divergences(_hist(spark, cur),
+                                 _hist(spark, base)).collect()
+    assert len(rows) == 1
+    psi, kl, n_p, n_q = _psi_kl(cur, base)
+    assert rows[0]["psi"] == pytest.approx(psi, rel=1e-12, abs=1e-15)
+    assert rows[0]["kl"] == pytest.approx(kl, rel=1e-12, abs=1e-15)
+    assert (rows[0]["n_current"], rows[0]["n_baseline"]) == (n_p, n_q)
+    if pinned:
+        assert (round(rows[0]["psi"], 6), round(rows[0]["kl"], 6)) == pinned
+
+
+def test_drift_empty_histograms_one_row(spark):
+    """Empty against empty: exactly one row, all NULL — for divergences
+    and for every drift rule of a plan over an empty table (ANSI mode
+    must not raise on the k = 0 division)."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    empty = _hist(spark, [])
+    rows = drift_ops.divergences(empty, empty).collect()
+    assert [tuple(r) for r in rows] == [(None, None, None, None)]
+
+    table = spark.createDataFrame([], "url string, bucket int, x long, y long")
+    plan = CheckPlan(drift_rules=[
+        DriftRule("x_drift", lambda: F.col("x"), "e", metric="psi"),
+        DriftRule("y_drift", lambda: F.col("y"), "e", metric="kl"),
+    ])
+    v = run_plan(table, plan, baselines={"e": empty}).verdicts.collect()
+    assert sorted((r.rule_id, r["pass"], r.metric) for r in v) == [
+        ("x_drift", None, None), ("y_drift", None, None)]
+
+
+def _drift_table(spark):
+    return spark.range(600).select(
+        F.col("id").cast("string").alias("url"),
+        (F.col("id") % 4).cast("int").alias("bucket"),
+        (F.col("id") % 7).alias("x"),
+        F.when(F.col("id") % 11 == 0, None)
+        .otherwise(F.col("id") % 5).alias("y"),
+    )
+
+
+def _drift_plan(n_rules):
+    rules = [
+        DriftRule("x_psi", lambda: F.col("x"), "bx", 0.2, "psi"),
+        DriftRule("y_kl", lambda: F.col("y"), "by", 0.05, "kl"),
+        DriftRule("x_mod_kl", lambda: F.col("x") % 3, "bx", 0.5, "kl"),
+    ]
+    return CheckPlan(drift_rules=rules[:n_rules])
+
+
+def _drift_baselines(spark):
+    return {
+        "bx": _hist(spark, [(b, 80 + 10 * b) for b in range(6)]),
+        "by": _hist(spark, [(None, 40), (0, 100), (1, 120), (2, 90), (9, 5)]),
+    }
+
+
+def test_drift_three_rules_in_one_plan(spark):
+    """Each verdict of a three-rule plan (psi and kl mixed, one baseline
+    shared by two rules) equals divergences on that rule's own
+    histograms."""
+    table = _drift_table(spark)
+    plan = _drift_plan(3)
+    baselines = _drift_baselines(spark)
+    got = {r.rule_id: (r.bucket_id, r["pass"], r.metric, r.rows_checked)
+           for r in run_plan(table, plan,
+                             baselines=baselines).verdicts.collect()}
+    assert set(got) == {r.rule_id for r in plan.drift_rules}
+    for r in plan.drift_rules:
+        want = drift_ops.divergences(
+            drift_ops.histogram(table, r.bucketizer()),
+            baselines[r.baseline_name]).first()[r.metric]
+        bucket_id, passed, metric, rows_checked = got[r.rule_id]
+        assert (bucket_id, rows_checked) == (-1, None)
+        assert metric == pytest.approx(want, rel=1e-12), r.rule_id
+        assert passed == (want <= r.max_value), r.rule_id
+
+
+def _exchanges(node):
+    """Exchange nodes of a physical plan, cached relations not entered."""
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.inputPlan()
+    kids = node.children()
+    return (("Exchange" in node.nodeName())
+            + sum(_exchanges(kids.apply(i)) for i in range(kids.size())))
+
+
+def test_drift_plan_has_no_join_and_fixed_exchanges(spark):
+    """A drift-only plan's verdicts come from one join-free reduction
+    shared by every drift rule: no Join in the optimized plan, and the
+    same number of exchanges for 2 drift rules as for 3."""
+    table = _drift_table(spark)
+    baselines = _drift_baselines(spark)
+
+    def plans(n_rules):
+        qe = run_plan(table, _drift_plan(n_rules),
+                      baselines=baselines).verdicts._jdf.queryExecution()
+        return qe.optimizedPlan().toString(), _exchanges(qe.executedPlan())
+
+    (opt2, exchanges2), (opt3, exchanges3) = plans(2), plans(3)
+    assert "Join" not in opt2 and "Join" not in opt3
+    assert exchanges2 == exchanges3
 
 
 def _files(root):

@@ -151,6 +151,9 @@ def test_words_positive_class_parity(spark):
         "unicode café über straße", "'' '", "x'y'z",
         "trailing space ", " leading", "a!b@c#d$e%f", "\n\n\n",
         "0'0 ''a'' b", "é combining",
+        # lower() maps these INTO the class: U+212A KELVIN SIGN -> 'k',
+        # U+0130 -> 'i' + U+0307
+        "\u212a", "5 \u212aelvin", "\u0130stanbul", "D\u0130Z\u0130",
     ]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(cases)],
                                "i long, t string")
