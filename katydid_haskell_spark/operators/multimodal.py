@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .similarity import _ordered_matmul
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -2068,7 +2070,10 @@ def phash64(gray: np.ndarray) -> int:
         small /= np.outer(np.diff(ye), np.diff(xe))
     else:
         small = g[(np.arange(n) * h) // n][:, (np.arange(n) * w) // n]
-    d = _PHASH_DCT @ small @ _PHASH_DCT.T
+    # ordered fold, not BLAS: most coefficients of a block-constant image
+    # sit within ulps of the median, so a kernel-dependent summation order
+    # would flip bits between executors with different CPUs
+    d = _ordered_matmul(_ordered_matmul(_PHASH_DCT, small), _PHASH_DCT.T)
     coefs = d[:8, :8].reshape(-1)[1:]            # drop DC
     med = np.median(coefs)
     bits = coefs > med

@@ -14,18 +14,23 @@ equivalent of broadcasting the transition table, with the table itself built
 on first use and amortized across the partition, exactly like the
 reference's shared ``State Mem`` across trees (``Relapse.hs:65-70``).
 
-Batch amortization (two levels, both per Arrow batch):
-- :func:`factorized_map` validates each DISTINCT document once and
-  gathers (validation is pure; duplicated corpora collapse to their
-  value cardinality);
-- JSON decode goes through ``labels._loads`` (orjson when present,
-  stdlib-fallback for >64-bit ints), so the remaining per-unique-doc
-  loop does no stdlib parsing on the hot path.
+Batch amortization (per Arrow batch, see ``vpa.py``):
+- :func:`~.vpa.decode_batch` factorizes the batch to its DISTINCT texts
+  and parses + flattens each once (``labels._loads``: orjson when
+  present, stdlib fallback for >64-bit ints).  The decode does not depend
+  on the spec, and PySpark hands the SAME Series object to every pandas
+  UDF of one ``ArrowEvalPython`` node that reads the same column, so
+  :func:`_decoded` keeps the last batch's decode per worker process and
+  the 2nd..Nth spec on a column decodes nothing;
+- :meth:`~.vpa.TableValidator.validate_decoded` then walks each distinct
+  (structure, symbol) signature once and scatters the verdicts back.
+:func:`factorized_map` is the exact-text dedup the XML and protobuf
+sources use for their per-document validators.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Optional
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -33,19 +38,18 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from .derive import Validator
-from .labels import decode_json
 from .parser import parse_grammar
 from .smart import compile_grammar
-from .vpa import try_table_validator
+from .vpa import DecodedBatch, TableValidator, decode_batch
 
-# per-process (executor) cache: spec source → Validator with warm memo tables
-_VALIDATORS: dict = {}
-
-# per-process cache: spec source → TableValidator (int-table VPA with
-# vectorized condition evaluation — the unique-doc fast path) or False
-# when the grammar's shape needs the per-doc Validator
+# per-process (executor) cache: (spec source, user lib) → TableValidator
+# with warm transition tables
 _TABLE_VALIDATORS: dict = {}
+
+# per-process: (last Arrow batch Series, its DecodedBatch).  The strong
+# reference keeps the Series alive, so an ``is`` hit can never be a
+# recycled id — any other object is decoded afresh.
+_LAST_DECODE: tuple = (None, None)
 
 
 def factorized_map(docs: pd.Series, one: Callable[[str], bool]) -> pd.Series:
@@ -97,28 +101,24 @@ def _lib_cache_key(user_lib):
     return tuple(parts)
 
 
-def _validator_for(source: str, user_lib=None) -> Validator:
-    key = (source, _lib_cache_key(user_lib))
-    v = _VALIDATORS.get(key)
-    if v is None:
-        v = Validator(compile_grammar(parse_grammar(source, user_lib)))
-        _VALIDATORS[key] = v
-    return v
-
-
-def _table_validator_for(source: str, user_lib=None):
-    import os
-    if os.environ.get("SPARK_GRAFT_NO_VPA") == "1":
-        # operational escape hatch + A/B lever for the bench: force the
-        # per-doc Validator path
-        return None
+def _table_validator_for(source: str, user_lib=None) -> TableValidator:
     key = (source, _lib_cache_key(user_lib))
     tv = _TABLE_VALIDATORS.get(key)
     if tv is None:
-        tv = try_table_validator(
-            compile_grammar(parse_grammar(source, user_lib))) or False
+        tv = TableValidator(compile_grammar(parse_grammar(source, user_lib)))
         _TABLE_VALIDATORS[key] = tv
-    return tv or None
+    return tv
+
+
+def _decoded(docs: pd.Series) -> DecodedBatch:
+    """The batch's spec-independent decode, shared by every spec that is
+    handed this very Series object (see the module docstring)."""
+    global _LAST_DECODE
+    last, dec = _LAST_DECODE
+    if last is not docs:
+        dec = decode_batch(docs)
+        _LAST_DECODE = (docs, dec)
+    return dec
 
 
 def json_matches_udf(spec_source: str, user_lib=None) -> Callable[[Column], Column]:
@@ -126,6 +126,8 @@ def json_matches_udf(spec_source: str, user_lib=None) -> Callable[[Column], Colu
 
     Compiles the spec on the driver first (fail fast), ships only the
     source.  NULL/invalid JSON → False (error-as-false at document level).
+    Runs the int-table VPA (``vpa.py``); a batch failure is a bug and
+    propagates.
     """
     # driver-side compile: surface spec errors before the job runs
     compile_grammar(parse_grammar(spec_source, user_lib))
@@ -133,25 +135,7 @@ def json_matches_udf(spec_source: str, user_lib=None) -> Callable[[Column], Colu
     @pandas_udf("boolean")
     def match(docs: pd.Series) -> pd.Series:
         tv = _table_validator_for(spec_source, user_lib)
-        if tv is not None:
-            # int-table VPA: vectorized condition eval over distinct
-            # labels + signature-factorized walks (vpa.py) — the
-            # unique-doc fast path.  No demotion catch: VpaUnsupported
-            # was retired (round-6 soak, scripts/vpa_soak.py) — a batch
-            # failure here is a bug and must propagate.
-            return pd.Series(tv.validate_batch(docs.tolist()))
-        v = _validator_for(spec_source, user_lib)
-
-        def one(doc: Optional[str]) -> bool:
-            if doc is None:
-                return False
-            try:
-                forest = decode_json(doc)  # orjson-backed batch decode
-            except Exception:
-                return False
-            return v.validate(forest)
-
-        return factorized_map(docs, one)
+        return pd.Series(tv.validate_decoded(_decoded(docs)))
 
     return match
 
@@ -220,19 +204,21 @@ def try_lower_json_spec(col: Column, spec_source: str, user_lib=None):
         pass
 
     def type_guard(fv, ty: str):
+        # integral test by remainder, not floor(): floor returns a bigint,
+        # which saturates past 2**63 and would call 1e45 non-integral
         sv = F.schema_of_variant(fv)
         if ty in (INT, UINT):
             dval = F.try_variant_get(fv, "$", "double")
             return (
                 (sv == "BIGINT")
                 | sv.rlike(r"^DECIMAL\(\d+,0\)$")
-                | ((sv == "DOUBLE") & F.coalesce(dval == F.floor(dval), F.lit(False)))
+                | ((sv == "DOUBLE") & F.coalesce(dval % 1 == 0, F.lit(False)))
             )
         if ty == DOUBLE:
             dval = F.try_variant_get(fv, "$", "double")
             return (
                 sv.rlike(r"^DECIMAL\(\d+,[1-9]\d*\)$")
-                | ((sv == "DOUBLE") & F.coalesce(dval != F.floor(dval), F.lit(False)))
+                | ((sv == "DOUBLE") & F.coalesce(dval % 1 != 0, F.lit(False)))
             )
         if ty == STRING:
             return sv == "STRING"
@@ -288,11 +274,22 @@ def try_lower_json_spec(col: Column, spec_source: str, user_lib=None):
             if var.ty != cst.ty:
                 return False
             guard = F.coalesce(type_guard(fv, var.ty), F.lit(False))
-            v = typed_value(fv, var.ty)
             c = F.lit(cst.value)
-            a, b = (c, v) if flipped else (v, c)
-            cmp = {"eq": a == b, "ne": a != b, "ge": a >= b,
-                   "gt": a > b, "le": a <= b, "lt": a < b}[name]
+
+            def compare(v):
+                a, b = (c, v) if flipped else (v, c)
+                return {"eq": a == b, "ne": a != b, "ge": a >= b,
+                        "gt": a > b, "le": a <= b, "lt": a < b}[name]
+
+            cmp = compare(typed_value(fv, var.ty))
+            if var.ty in (INT, UINT):
+                # Int labels are unbounded (Json.hs's JSRational): a value
+                # past bigint compares as decimal(38,0), past that (an
+                # integral DOUBLE) as double — only reached on overflow
+                cmp = F.coalesce(
+                    cmp,
+                    compare(F.try_variant_get(fv, "$", "decimal(38,0)")),
+                    compare(F.try_variant_get(fv, "$", "double")))
             return band(guard, F.coalesce(cmp, F.lit(False)))
         if name in ("hasPrefix", "hasSuffix", "regex", "contains"):
             guard = F.coalesce(type_guard(fv, STRING), F.lit(False))
@@ -368,5 +365,9 @@ def try_lower_json_spec(col: Column, spec_source: str, user_lib=None):
         cond = lower_pattern(g.main)
     except _NoFast:
         return None
-    # malformed / NULL documents match nothing (the automaton returns False)
-    return F.when(doc.isNull(), F.lit(False)).otherwise(to_col(cond))
+    # malformed / NULL documents match nothing (the automaton returns
+    # False).  Every leaf is coalesced to a non-NULL boolean, so an AND
+    # gives the same truth table as a CASE WHEN — and unlike a CASE
+    # branch it leaves the leaves unconditional, so subexpression
+    # elimination parses the document once per row for all of them.
+    return doc.isNotNull() & to_col(cond)

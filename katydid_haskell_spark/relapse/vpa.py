@@ -33,6 +33,14 @@ per-label step a vectorized batch operation:
    — the generalization of ``factorized_map``'s exact-text dedup: corpora
    with all-unique text but shared shape validate in O(distinct shapes).
 
+4. **Decoding is spec-independent.**  :func:`decode_batch` factorizes a
+   batch to its distinct texts and parses + flattens each once into one
+   event buffer over one label intern (:class:`DecodedBatch`, read-only
+   afterwards); :meth:`TableValidator.validate_decoded` does the
+   spec-dependent rest — masks, gather, signature walks — and scatters
+   the verdicts back to documents.  Any number of specs validate the same
+   decode, so a column read by N specs is parsed once, not N times.
+
 Fallback: user libs whose conditions the vectorizer cannot batch run the
 scalar per-distinct-label fallback inside the table path.  There is no
 grammar-shape fallback anymore: the former ``VpaUnsupported`` escape was
@@ -48,6 +56,7 @@ import math as _math
 from typing import Dict, List, Optional, Tuple
 
 import numpy as np
+import pandas as pd
 
 from .derive import derive_calls, derive_returns, unzip_nulls, zippy
 from .exprs import (
@@ -173,21 +182,15 @@ class CondBatch:
         vals = np.empty(n, dtype=object)
         for i, l in enumerate(labels):
             vals[i] = l.value
-        return self._masks(tys, vals, labels)
+        return self.masks_arrays(tys, vals, labels)
 
-    def masks_arrays(self, tys_list: List[int], vals_list: List[object],
+    def masks_arrays(self, tys: np.ndarray, vals: np.ndarray,
                      labels: Optional[List[Label]]) -> np.ndarray:
-        """Bitmasks from raw (type-code, value) arrays; ``labels`` (the
-        Label views) only needed when a condition uses the scalar
-        fallback (see :attr:`needs_fallback`)."""
-        n = len(tys_list)
-        tys = np.asarray(tys_list, dtype=np.int8)
-        vals = np.empty(n, dtype=object)
-        vals[:] = vals_list
-        return self._masks(tys, vals, labels)
+        """Bitmasks from (int8 type-code, object value) arrays; ``labels``
+        (the Label views) only needed when a condition uses the scalar
+        fallback (see :attr:`needs_fallback`).
 
-    def _masks(self, tys, vals, labels) -> np.ndarray:
-        """≤63 conditions: 1D int64 bitmask per label (the hot layout —
+        ≤63 conditions: 1D int64 bitmask per label (the hot layout —
         signature arrays stay int64 and hash via tobytes).  Beyond one
         machine word: a 2D int64 array [n_labels, n_words], word w
         holding condition bits 63w..63w+62 — every word evaluates in
@@ -455,10 +458,6 @@ class _LabelIntern:
         self.tys: List[int] = []    # _TY_CODE per distinct label
         self.vals: List[object] = []
 
-    def labels(self) -> List[Label]:
-        rev = {v: k for k, v in _TY_CODE.items()}
-        return [Label(rev[t], v) for t, v in zip(self.tys, self.vals)]
-
 
 def _flatten_json(v, ev: list, it: _LabelIntern) -> None:
     """Flatten a parsed JSON value into the event list ``ev``.
@@ -541,6 +540,69 @@ def _flatten_json(v, ev: list, it: _LabelIntern) -> None:
         it.vals.append(v)
     ev.append(li)
     ev.append(RET_EV)
+
+
+class DecodedBatch:
+    """The spec-independent half of validating a batch of JSON texts.
+
+    ``codes[i]`` is document i's index among the batch's distinct texts
+    (-1 for NULL); ``spans`` holds one ``(text index, start, end)`` slice
+    of ``events`` per distinct text that parsed and encoded (the others
+    match nothing); ``tys``/``vals`` are the distinct labels every event
+    indexes.  Read-only once built, so any number of specs can validate
+    the same decode."""
+
+    __slots__ = ("codes", "n_texts", "events", "spans", "tys", "vals",
+                 "_labels")
+
+    def __init__(self, codes, n_texts, events, spans, tys, vals):
+        self.codes = codes
+        self.n_texts = n_texts
+        self.events = events
+        self.spans = spans
+        self.tys = tys
+        self.vals = vals
+        self._labels: Optional[List[Label]] = None
+
+    def labels(self) -> List[Label]:
+        """Label views of the distinct labels (scalar-fallback input)."""
+        if self._labels is None:
+            rev = {v: k for k, v in _TY_CODE.items()}
+            self._labels = [Label(rev[t], v) for t, v in
+                            zip(self.tys.tolist(), self.vals)]
+        return self._labels
+
+
+def decode_batch(docs) -> DecodedBatch:
+    """Parse and flatten each DISTINCT text of ``docs`` once.
+
+    ``docs`` is a sequence of JSON texts (a pandas Series, a list);
+    None / NaN are NULL.  Malformed JSON and values with no label
+    encoding get no span, so they validate False under every spec."""
+    codes, uniques = pd.factorize(np.asarray(docs, dtype=object))
+    it = _LabelIntern()
+    loads = _loads
+    # ONE growing event buffer + (text, start, end) spans: the label
+    # gather in validate_decoded is a single fancy-index over the whole
+    # batch instead of one small gather per document
+    buf: list = []
+    spans = []
+    for ui, s in enumerate(uniques.tolist()):
+        try:
+            v = loads(s)
+        except Exception:
+            continue
+        start = len(buf)
+        try:
+            _flatten_json(v, buf, it)
+        except TypeError:
+            del buf[start:]
+            continue
+        spans.append((ui, start, len(buf)))
+    vals = np.empty(len(it.vals), dtype=object)
+    vals[:] = it.vals
+    return DecodedBatch(codes, len(uniques), np.asarray(buf, dtype=np.int32),
+                        spans, np.asarray(it.tys, dtype=np.int8), vals)
 
 
 def _combine_words(m: np.ndarray) -> List[int]:
@@ -727,42 +789,25 @@ class TableValidator:
     # -- batch API --
 
     def validate_batch(self, docs) -> np.ndarray:
-        """Verdicts for an iterable of JSON document strings (None /
-        malformed → False), factorized by walk signature."""
-        n = len(docs)
-        out = np.zeros(n, dtype=bool)
-        it = _LabelIntern()
-        loads = _loads
-        # ONE growing event buffer + (doc, start, end) spans: the label
-        # gather below is a single fancy-index over the whole batch
-        # instead of one small gather per document (round-6 hot-loop fix)
-        buf: list = []
-        spans = []
-        for di in range(n):
-            s = docs[di]
-            if s is None:
-                continue
-            try:
-                v = loads(s)
-            except Exception:
-                continue
-            start = len(buf)
-            try:
-                _flatten_json(v, buf, it)
-            except TypeError:
-                del buf[start:]
-                continue
-            spans.append((di, start, len(buf)))
-        if not spans:
-            return out
-        all_ev = np.asarray(buf, dtype=np.int32)
+        """Verdicts for a sequence of JSON document strings (None /
+        malformed → False): :func:`decode_batch` then
+        :meth:`validate_decoded`."""
+        return self.validate_decoded(decode_batch(docs))
+
+    def validate_decoded(self, batch: DecodedBatch) -> np.ndarray:
+        """Verdicts for a decoded batch, one per document, factorized by
+        walk signature.  Does not modify ``batch``."""
+        # one slot per distinct text plus a trailing False for code -1
+        # (NULL), so the scatter back to documents is one fancy-index
+        verdicts = np.zeros(batch.n_texts + 1, dtype=bool)
         # mask-stability retry: a walk can mint a new condition (leaf
         # or/and merge), which re-bits the label masks — recompute and
         # restart.  Bounded: each restart adds ≥1 condition, and the
         # reachable mint set is finite (merges of reachable leaf exprs).
-        while True:
-            labels = it.labels() if self.batch.needs_fallback else None
-            label_masks = self.batch.masks_arrays(it.tys, it.vals, labels)
+        while batch.spans:
+            labels = batch.labels() if self.batch.needs_fallback else None
+            label_masks = self.batch.masks_arrays(batch.tys, batch.vals,
+                                                  labels)
             # sentinel: RETURN events (-1) gather the trailing all-ones
             # mask, so one fancy-indexing pass yields the complete
             # signature array.  Wide (>63 conds) masks are 2D int64
@@ -775,10 +820,10 @@ class TableValidator:
                     np.full((1, label_masks.shape[1]), -1, np.int64)])
             else:
                 lm_ext = np.append(label_masks, np.int64(-1))
-            gathered = lm_ext[all_ev]
+            gathered = lm_ext[batch.events]
             sig_verdict: Dict[bytes, bool] = {}
             try:
-                for di, s0, s1 in spans:
+                for ui, s0, s1 in batch.spans:
                     m = gathered[s0:s1]
                     sig = m.tobytes()
                     v = sig_verdict.get(sig)
@@ -786,21 +831,20 @@ class TableValidator:
                         ml = _combine_words(m) if wide else m.tolist()
                         v = self._walk(ml)
                         sig_verdict[sig] = v
-                    out[di] = v
-                return out
+                    verdicts[ui] = v
+                break
             except _CondsChanged:
                 continue
+        return verdicts[batch.codes]
 
 
-def try_table_validator(g: SGrammar) -> Optional[TableValidator]:
+def try_table_validator(g: SGrammar) -> TableValidator:
     """A TableValidator for the grammar.
 
     Historically returned None for shapes the tables couldn't express
     (``VpaUnsupported``); that class was retired in round 6 after a
     10k-case soak (``scripts/vpa_soak.py``, seeds 99+7: 6000+4000
     random AST / wide / recursive grammars, zero construction or batch
-    failures, 250 full engine cross-checks) — construction now always
-    succeeds, and a genuine future failure should propagate as the bug
-    it is rather than silently demote to the 100x-slower per-doc path.
-    The Optional signature is kept for the callers' None-checks."""
+    failures, 250 full engine cross-checks) — construction always
+    succeeds, and a genuine failure propagates as the bug it is."""
     return TableValidator(g)

@@ -27,6 +27,7 @@ from katydid_haskell_spark.relapse.vpa import (
     CondBatch,
     TableValidator,
     collect_conds,
+    decode_batch,
     try_table_validator,
 )
 
@@ -191,6 +192,54 @@ def test_condbatch_vectorized_matches_scalar_eval():
         want = [eval_bool_or_false(cond, l) for l in labels]
         got = [bool((int(m) >> bit) & 1) for m in masks]
         assert got == want, f"cond {cond}: vec={got} scalar={want}"
+
+
+def test_shared_decode_matches_per_document_validation():
+    """One decode serves every spec: with verbatim duplicates, NULL and
+    malformed text in the batch, each spec's verdicts on the shared
+    decode equal validating each document alone and the engine's, and no
+    spec (a condition-minting one included) changes the decode."""
+    hit = '{"tags": ["x", "xy"], "k": 87, "p": {"a": 1, "b": 2}}'
+    docs = [hit, None, hit, "not json", '{"k": 2e400}', "{}", "null",
+            '{"tags": ["xy", "x"], "k": 123456789012345678901234567890}',
+            hit, "not json", None, '{"p": {"b": 2, "a": 1}, "k": 87.0}']
+    batch = decode_batch(docs)
+    assert batch.n_texts == len({d for d in docs if d is not None})
+    before = (batch.codes.copy(), batch.events.copy(), list(batch.spans),
+              batch.tys.copy(), list(batch.vals))
+    for spec in (".k >= 50", "p: [a:*, b:*]", "!(p: {a:*; b:*})",
+                 '.tags: {_: == "x"; (_: == "t1")?; _: ^= "x"}'):
+        g = compile_grammar(parse_grammar(spec))
+        v = Validator(g)
+        want = [_engine_verdict(v, d) for d in docs]
+        tv = TableValidator(g)
+        assert list(tv.validate_decoded(batch)) == want, spec
+        assert list(tv.validate_batch(docs)) == want, spec
+        alone = TableValidator(g)
+        assert [bool(alone.validate_batch([d])[0]) for d in docs] == want
+    after = (batch.codes, batch.events, batch.spans, batch.tys, batch.vals)
+    for x, y in zip(before, after):
+        assert np.array_equal(np.asarray(x, dtype=object),
+                              np.asarray(y, dtype=object))
+
+
+def test_decode_cache_reuses_only_the_same_series():
+    """The UDF-side decode entry is keyed by object identity: the same
+    Series object reuses its decode, an equal copy is decoded afresh."""
+    import pandas as pd
+
+    from katydid_haskell_spark.relapse import automaton
+
+    s = pd.Series(['{"k": 1}', '{"k": 1}', None, '{"k": 60}'])
+    d = automaton._decoded(s)
+    assert automaton._decoded(s) is d
+    copy = s.copy()
+    d_copy = automaton._decoded(copy)
+    assert d_copy is not d
+    assert automaton._decoded(copy) is d_copy
+    assert automaton._decoded(s) is not d_copy
+    tv = TableValidator(compile_grammar(parse_grammar(".k >= 50")))
+    assert list(tv.validate_decoded(d_copy)) == [False, False, False, True]
 
 
 def test_vpa_tables_grow_lazily_and_are_reused():
